@@ -62,8 +62,7 @@ class PipelineManager:
         self._send_failures: dict[tuple[str, int], int] = {}
         # engine-pushed metrics (DynamicMetricsManager analog): a
         # StreamingQueryListener that accumulates bounded per-query
-        # progress; metrics_summary() merges its reduce into the
-        # poll-based snapshot
+        # progress; metrics_summary() serves its reduce
         from brooklin_spark.metrics import shared as _shared_metrics
 
         self.metrics = _shared_metrics(spark)
@@ -688,38 +687,20 @@ class PipelineManager:
         return out
 
     def metrics_summary(self) -> dict:
-        """Cluster-level reduce over per-pipeline progress (the
-        KafkaConnectorDiagUtils.reduce / ServerComponentHealthAggregator
-        analog, SURVEY.md §3.3): aggregate throughput and batch counts
-        across every running query."""
-        total_rows = 0.0
-        rates = []
-        active = 0
-        batches = 0
-        for spec in self.list():
-            r = self._running.get(spec.name)
-            q = r.query if r else None
-            if q is None:
-                continue
-            if q.isActive:
-                active += 1
-            for prog in q.recentProgress:
-                total_rows += prog.get("numInputRows") or 0
-                batches += 1
-                rate = prog.get("processedRowsPerSecond")
-                if rate:
-                    rates.append(rate)
-        out = {
+        """Cluster-level reduce (the KafkaConnectorDiagUtils.reduce /
+        ServerComponentHealthAggregator analog, SURVEY.md §3.3): pipeline
+        and active-query counts plus the MetricsStore listener's lifetime
+        reduce of the progress events the engine pushes — row and batch
+        totals and batch-latency percentiles. Nothing here polls a
+        query's progress."""
+        running = list(self._running.values())
+        return {
             "pipelines": len(self.list()),
-            "active_queries": active,
-            "recent_batches": batches,
-            "recent_input_rows": int(total_rows),
-            "mean_processed_rows_per_sec": (sum(rates) / len(rates)) if rates else 0.0,
+            "active_queries": sum(
+                1 for r in running if r.query is not None and r.query.isActive
+            ),
+            "listener": self.metrics.summary(),
         }
-        # merge the listener's lifetime reduce (survives recentProgress's
-        # rolling window): totals + batch-latency percentiles
-        out["listener"] = self.metrics.summary()
-        return out
 
     # --------------------------------------------------------------- private
     def _find_duplicate(self, spec: PipelineSpec) -> str | None:

@@ -1568,7 +1568,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("n").cast("double") / F.col("total"), 6).alias("p"),
     )
     # r10-opt (guide §2.4, A/B 6/6 at 0.88 vs 1.79 s min,
-    # scripts/r10_markov_ab.py, value identity asserted): the old form ran
+    # OPTIMIZATION_r10.md §6d, value identity asserted): the old form ran
     # each of the 6 rounds as a broadcast join + groupBy over the 25-row
     # matrix — 12 tiny exchanges and 6 broadcast builds of pure round
     # latency at ANY corpus size (the matrix is domain-bounded). The whole

@@ -777,10 +777,11 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # noise ~1e-17 — five orders below the grid), so the trajectories are
 # bit-identical and the SQL oracle simply unrolls the five steps.
 #
-# Scale shape: ranks live in a (node, rank) table; each round is ONE
-# shuffle (contributions keyed by dst) plus a broadcast-back of the
-# degree table. 100 TB graphs run the same plan with more partitions —
-# nothing is collected driver-side.
+# Scale shape: the graph is materialized once as a customer-grouped
+# adjacency (ck, sorted supplier array); ranks live in two node-scale
+# tables, and each round is ONE supplier-keyed shuffle plus a broadcast of
+# the node-scale supplier messages. 100 TB graphs run the same plan with
+# more partitions — nothing is collected driver-side.
 # ---------------------------------------------------------------------------
 
 def _key_upper_bound(sf_dir: str, tbl: str, col: str) -> int | None:
@@ -853,13 +854,11 @@ def _graph_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized table shrinks from pair rows to customer rows of arrays.
     Packed-long shuffle when the key bounds allow (same rule as
     _graph_pairs), two-column fallback otherwise.  A/B'd against the
-    distinct-pairs build end-to-end on PageRank
-    (scripts/r9_pagerank_build_ab.py): sf1 min-of-3 7.26 s vs 7.99 s,
-    every rep faster; sf0.1 ~0.4 s SLOWER under the r9 edge-table rounds
-    (hence the original `_PR_FUSED_LI_ROWS` = 2M). With the r10 bipartite
-    rounds the fused shape wins at sf0.1 too (scripts/r10_pr_sf01_ab.py),
-    so PageRank's threshold is now 0; kcore keeps its own crossover in
-    `_KCORE_GROUPED_LI_ROWS`."""
+    distinct-pairs build end-to-end on PageRank (OPTIMIZATION_r09.md
+    item 12): sf1 median 7.26 s vs 7.95 s; sf0.1 ~0.4 s SLOWER under the
+    r9 edge-table rounds. With the r10 bipartite rounds the fused shape
+    wins at sf0.1 too (OPTIMIZATION_r10.md §6b), so it is PageRank's only
+    build; kcore keeps its own crossover in `_KCORE_GROUPED_LI_ROWS`."""
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     joined = o.join(li, li.l_orderkey == o.o_orderkey)
@@ -918,26 +917,16 @@ _PR_D = 0.85
 _PR_ITERS = 5
 #: above this many fact rows the graph tables spill columnar (see below)
 _PR_SPILL_LI_ROWS = 100_000_000
-#: above this many fact rows PageRank's pair+degree build fuses into the
-#: one-exchange grouped-adjacency shape (_graph_grouped) feeding the
-#: bipartite rounds. The r9 crossover (plain wins sf0.1 by ~0.4 s,
-#: scripts/r9_pagerank_build_ab.py) compared the two BUILDS under the SAME
-#: edge-table rounds; with the r10 bipartite rounds the fused shape wins
-#: at sf0.1 too (scripts/r10_pr_sf01_ab.py, alternating min-of-N, value
-#: identity asserted: fused min 3.62 vs plain 4.14 s and 4.51 vs 4.89 s
-#: across two sessions, fused 8/4 on warm paired reps), so the threshold
-#: is now 0 — fused everywhere, still parameterized for A/B forcing.
-_PR_FUSED_LI_ROWS = 0
 #: kcore keeps the r9 pair-table peel below this (its own measured
-#: crossover, scripts/r10_kcore_ab.py: sf0.1 pairs wins 5/5 — the grouped
+#: crossover, OPTIMIZATION_r10.md §3: sf0.1 pairs wins 5/5 — the grouped
 #: build + per-round broadcast jobs lose to the 3-round latency floor;
 #: sf1 grouped 3/4, sf10 grouped 3/3 at 2.7x). Data-derived (parquet
 #: footer row count), not core-count-derived.
 _KCORE_GROUPED_LI_ROWS = 2_000_000
-#: the bipartite rounds broadcast the node-scale supplier message table
-#: (sk, rank/deg) once per round; above this many suppliers (~1 GiB framed,
-#: TPC-H shape reaches it around sf6000) fall back to the edge-table rounds
-#: instead of risking the 8 GiB broadcast cap
+#: kcore's grouped peel broadcasts the node-scale newly-dead supplier set
+#: once per round; above this supplier key bound (~1 GiB framed, TPC-H
+#: shape reaches it around sf6000) it keeps the pair-table peel instead of
+#: risking the 8 GiB broadcast cap
 _PR_MSG_BCAST_MAX_SUPPLIERS = 64_000_000
 
 #: per-corpus fact row counts for the spill switches — read ONCE from the
@@ -988,8 +977,11 @@ def _pr_bipartite_rounds(g: DataFrame, deg_s: DataFrame, n_c: int, n_s: int) -> 
     node sets — the oracle's LEFT-join-over-nodes is still redundant here,
     same argument as the r9 edge-table rounds. The two per-direction rank
     chains are disjoint (ranks_c(k+1) reads only ranks_s(k) and vice
-    versa), so keeping them lazy double-evaluates nothing."""
-    n = n_c + n_s
+    versa), so keeping them lazy double-evaluates nothing. An empty graph
+    (no lineitem rows) has empty g and deg_s, so every table below is
+    empty and the result is the oracle's zero rows; n is clamped to 1
+    only so the Python-side constants never divide by zero."""
+    n = max(n_c + n_s, 1)
     base = (1.0 - _PR_D) / n
     r0 = F.round(F.lit(1.0) / n, 8)
     ranks_c = g.select("ck", r0.alias("rank"))
@@ -1053,161 +1045,46 @@ def _pr_iter_sql(k: int) -> str:
     """,
 )
 def graph_pagerank_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize the STATIC graph tables once (edges/degree are re-read
-    # every round; unchecked, the orders+lineitem join would re-execute
-    # per round). The per-round ranks stay LAZY: each round's output
-    # feeds exactly one consumer, so the five rounds compile into one
-    # linear DAG executed once — measured faster at sf1 than eager
-    # per-round checkpoints (20.7 s vs 27.5 s best-of-2), which paid five
-    # materialization barriers for lineage nothing re-derives. The
-    # out-degree is joined onto the edge table ONCE (edeg) instead of a
-    # second join inside every round — 5 fewer joins per run.
-    # ONE checkpoint of the narrow distinct-pair table; everything else
-    # (edges, degree, node set, n) derives from it without touching the
-    # fact tables again. In the doubled graph deg(c)=pairs per customer
-    # and deg(s)=pairs per supplier, so degree is two tiny groupBys over
-    # pairs — no 2x-edge aggregation, no separate nodes scan.
+    # ONE execution path at every scale: grouped-adjacency build
+    # (_graph_grouped: one fact-scale exchange yields the pairs AND
+    # deg(c) = size(ss)), materialized hash-partitioned on ck, then the
+    # bipartite rounds (_pr_bipartite_rounds), which join, write and
+    # exchange nothing pair-scale. The per-round ranks stay LAZY: each
+    # round's output feeds exactly one consumer, so the five rounds
+    # compile into one linear DAG executed once. No second path: the r9
+    # pair-table build and edge-table rounds measured slower at every
+    # booked scale (OPTIMIZATION_r10.md §1 and §6b; sf100 edge-table
+    # rounds 604 s vs 362 s bipartite).
     # memory-vs-disk materialization switch (r6): localCheckpoint caches
     # DESERIALIZED partitions — fastest at bench scales, but the sf100
-    # graph (~1.5B distinct pairs) measured 4.1 GiB per partition x 32
-    # and exhausted first scratch disk (48 g heap) then heap (96 g). Past
-    # _PR_SPILL_LI_ROWS fact rows the graph tables spill COLUMNAR instead:
-    # pairs to a plain scratch table, the per-round edge table to a
-    # bucketed-by-src scratch table whose scan keeps HashPartitioning —
-    # same zero-edge-Exchange rounds, no JVM cache (checkpoint.py
-    # spill_bucketed). One JVM's memory is the only thing this switch is
-    # about; on a real cluster the threshold is per-executor and the
-    # bucketed form is simply the durable variant.
-    # switch decision reads the parquet footers (cached per corpus), not a
-    # count() job in the measured path; scratch names fold in the corpus
-    # key + pid (collision-safe across sessions AND concurrent processes —
-    # same keying convention as the persisted BM25/IVF caches), with
-    # dead-pid orphans garbage-collected on entry
-    li_rows = _lineitem_rows(spark, sf_dir)
-    spill = li_rows > _PR_SPILL_LI_ROWS
-    fused = li_rows > _PR_FUSED_LI_ROWS
-    if spill:
-        from brooklin_spark.checkpoint import (
-            drop_scratch_table,
-            gc_dead_scratch,
-            scratch_name,
-        )
+    # graph exhausted first scratch disk (48 g heap) then heap (96 g).
+    # Past _PR_SPILL_LI_ROWS fact rows the grouped adjacency spills
+    # COLUMNAR to a ck-bucketed scratch table whose scan keeps
+    # HashPartitioning(ck) — the same exchange-free rounds, no JVM cache
+    # (checkpoint.py spill_bucketed). The switch reads the parquet footers
+    # (cached per corpus), not a count() job in the measured path; scratch
+    # names fold in the corpus key + pid (collision-safe across sessions
+    # AND concurrent processes), with dead-pid orphans garbage-collected
+    # on entry.
+    g = _graph_grouped(spark, sf_dir)
+    if _lineitem_rows(spark, sf_dir) > _PR_SPILL_LI_ROWS:
+        from brooklin_spark.checkpoint import gc_dead_scratch, scratch_name
 
-        corpus = os.path.join(sf_dir, "lineitem.parquet")
         gc_dead_scratch(spark, "pr_grouped_scratch")
-        gc_dead_scratch(spark, "pr_pairs_scratch")
-        gc_dead_scratch(spark, "pr_edeg_scratch")
-    if fused:
-        # grouped-adjacency build (_graph_grouped): ONE fact-scale
-        # exchange yields pairs AND deg(c) = size(ss). r10 phase 2: the
-        # rounds themselves now run BIPARTITE over this table
-        # (_pr_bipartite_rounds), which deletes the r9 fused path's
-        # remaining pair-scale operators outright — the edges∪reverse
-        # union, the pair-scale edeg build join, and the bucketed edeg
-        # scratch write (at sf100: a ~3B-row join plus a ~3B-row parquet
-        # write) all disappear. The only pair-scale pass left at build is
-        # ONE explode→partial-agg for deg(s), and the only materialized
-        # table is the grouped adjacency itself: pair-scale *elements*,
-        # node-scale *rows*. Materialization keeps HashPartitioning(ck)
-        # (bucketed scratch past the spill threshold, AQE-off checkpoint
-        # below it) so every round's groupBy(ck) rides it exchange-free.
-        g = _graph_grouped(spark, sf_dir)
-        if spill:
-            g = spill_bucketed(g, "ck", scratch_name("pr_grouped_scratch", corpus))
-        else:
-            g = checkpoint_partitioned(g)
-        # deg(s) = customers carrying s — the single remaining pair-scale
-        # aggregate, run once at build (partial aggregation bounds its
-        # exchange at partitions × suppliers); node-scale checkpoint so
-        # the per-round supplier message table never re-derives it
-        deg_s = checkpoint_partitioned(
-            g.select(F.explode("ss").alias("sk"))
-            .groupBy("sk")
-            .agg(F.count("*").alias("deg"))
-        )
-        n_s = deg_s.count()
-        if n_s <= _PR_MSG_BCAST_MAX_SUPPLIERS:
-            return _pr_bipartite_rounds(g, deg_s, g.count(), n_s)
-        # beyond-broadcast supplier side: r9 edge-table rounds, with
-        # pairs/degree derived from the grouped build (deg(s) reused)
-        deg_c = g.select(
-            (F.col("ck") * 2).alias("node"),
-            F.size("ss").cast("long").alias("deg"),
-        )
-        pairs = g.select(
-            (F.col("ck") * 2).alias("c_node"), F.explode("ss").alias("s")
-        ).select("c_node", (F.col("s") * 2 + 1).alias("s_node"))
-        degree = deg_c.unionAll(
-            deg_s.select((F.col("sk") * 2 + 1).alias("node"), F.col("deg"))
-        )
+        corpus = os.path.join(sf_dir, "lineitem.parquet")
+        g = spill_bucketed(g, "ck", scratch_name("pr_grouped_scratch", corpus))
     else:
-        if spill:
-            pairs_tbl = scratch_name("pr_pairs_scratch", corpus)
-            drop_scratch_table(spark, pairs_tbl)
-            _graph_pairs(spark, sf_dir).write.saveAsTable(pairs_tbl)
-            pairs = spark.table(pairs_tbl)
-        else:
-            pairs = _graph_pairs(spark, sf_dir).localCheckpoint()
-        degree = (
-            pairs.groupBy(F.col("c_node").alias("node")).agg(
-                F.count("*").alias("deg")
-            )
-            .unionAll(
-                pairs.groupBy(F.col("s_node").alias("node")).agg(
-                    F.count("*").alias("deg")
-                )
-            )
-        )
-    edges = _graph_edges(pairs)
-    # materialize the edge table HASH-PARTITIONED ON src (the per-round
-    # join key): LogicalRDD (or the bucketed scan) preserves the output
-    # partitioning, so every round's rank x edge join reuses it and only
-    # the (node-sized) rank side moves — round-robin here made each round
-    # re-exchange the FULL edge table (5 big shuffles, visible with
-    # broadcast disabled, and ReuseExchange does not fire across the
-    # per-round attribute re-instances; see brooklin_spark/checkpoint.py
-    # for why the plain checkpoint loses the partitioning under AQE).
-    # Skew note: the per-round join would hash-partition by src anyway,
-    # so a heavy node costs the same either way — this just stops paying
-    # it five times.
-    edeg_df = (
-        edges.join(degree, degree.node == edges.src)
-        .select("src", "dst", "deg")
+        g = checkpoint_partitioned(g)
+    # deg(s) = customers carrying s — the single pair-scale aggregate, run
+    # once at build (partial aggregation bounds its exchange at partitions
+    # × suppliers); node-scale checkpoint so the per-round supplier message
+    # table never re-derives it
+    deg_s = checkpoint_partitioned(
+        g.select(F.explode("ss").alias("sk"))
+        .groupBy("sk")
+        .agg(F.count("*").alias("deg"))
     )
-    if spill:
-        edeg = spill_bucketed(edeg_df, "src", scratch_name("pr_edeg_scratch", corpus))
-    else:
-        edeg = checkpoint_partitioned(
-            edeg_df.repartition(spark.sparkContext.defaultParallelism, F.col("src"))
-        )
-    nodes = degree.select("node")  # one row per node by construction
-    n = degree.count()  # scalar graph size (legitimate: one long)
-    ranks = nodes.select("node", F.round(F.lit(1.0) / n, 8).alias("rank"))
-    base = (1.0 - _PR_D) / n
-    for _ in range(_PR_ITERS):
-        # join strategy deliberately UNHINTED (r9-opt, guide §3.1,
-        # measured): at bench scale AQE converts the node-scale rank side
-        # to a runtime broadcast join (zero rank exchange per round); a
-        # forced SHUFFLE_HASH "optimization" suppressed that and cost
-        # +24% (4.79 -> 5.93 s back-to-back) — AQE's dynamic selection IS
-        # the scale-adaptive answer here (broadcast when ranks fit,
-        # SMJ/SHJ when they don't).
-        contribs = edeg.join(ranks, ranks.node == edeg.src).select(
-            F.col("dst"), (F.col("rank") / F.col("deg")).alias("contrib")
-        )
-        summed = contribs.groupBy(F.col("dst").alias("node")).agg(
-            F.sum("contrib").alias("inflow")
-        )
-        # the oracle LEFT-joins nodes for inflow-less nodes, but in the
-        # DOUBLED bipartite graph every node has an incoming edge (each
-        # pair emits both directions), so the aggregate already covers
-        # the full node set — the per-round nodes join is provably
-        # redundant and dropping it removes 5 broadcast joins.
-        ranks = summed.select(
-            "node",
-            F.round(F.lit(base) + _PR_D * F.col("inflow"), 8).alias("rank"),
-        )
-    return ranks.select(_graph_node_str("node").alias("node"), "rank")
+    return _pr_bipartite_rounds(g, deg_s, g.count(), deg_s.count())
 
 
 # ---------------------------------------------------------------------------
@@ -1282,7 +1159,7 @@ def fuzzy_name_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # k-hop BFS reach: minimum hop distance from a seed set over the bipartite
-# customer-supplier order graph (same edge table as PageRank) — the
+# customer-supplier order graph (the same graph as PageRank) — the
 # "blast radius" query of lineage/impact analysis. Shape: per round, ONE
 # frontier⋈edges equi-join (frontier is the only thing that moves; at
 # real scale it's the small side and broadcasts) + an anti-join against
@@ -1360,7 +1237,7 @@ def graph_nhop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 # linked; after K rounds every node carries the min part id within K
 # hops — the bounded-round community detector (LPA shape) that
 # complements the run-to-convergence connected components above. Scale
-# shape mirrors PageRank: the edge table is built once and
+# shape: the edge table is built once and
 # localCheckpoint'd (reused by both rounds + the node set), each round
 # is one src-keyed join + one node-keyed min aggregate; labels are
 # (node, long) pairs — the only data that moves.
@@ -1872,16 +1749,17 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees to empty relations. Same early-dead-neighbor argument as
     # the r9 form (decrements against already-dead nodes are discarded by
     # the alive join). Beyond-broadcast supplier domains (footer bound,
-    # same guard as PageRank's message broadcast) keep the r9 pair path.
-    # Crossover measured r10 (scripts/r10_kcore_ab.py, alternating
+    # _PR_MSG_BCAST_MAX_SUPPLIERS) keep the r9 pair path.
+    # Crossover measured r10 (OPTIMIZATION_r10.md §3, alternating
     # min-of-N, oracle-equal both sides): sf0.1 pairs wins 5/5 (3.13 vs
     # 3.62 s — the grouped build + per-round broadcast jobs lose to the
     # 3-round latency floor), sf1 grouped wins 3/4 (4.38 vs 4.49 s), sf10
     # grouped wins 3/3 (min 35.9 vs 96.5 s, 2.7x — vs DuckDB's 38.7 s
     # booked sf10, i.e. the r9 1.32x flag row crosses under 1x). Own
-    # data-derived threshold (_KCORE_GROUPED_LI_ROWS): PageRank's fused
-    # switch dropped to 0 after the r10 bipartite-rounds re-measurement,
-    # but kcore's sf0.1 crossover still favors the pair peel.
+    # data-derived threshold (_KCORE_GROUPED_LI_ROWS): PageRank runs the
+    # grouped build at every scale since the r10 bipartite-rounds
+    # re-measurement, but kcore's sf0.1 crossover still favors the pair
+    # peel.
     max_s = _key_upper_bound(sf_dir, "lineitem", "l_suppkey")
     fused = _lineitem_rows(spark, sf_dir) > _KCORE_GROUPED_LI_ROWS
     if fused and max_s is not None and 0 <= max_s <= _PR_MSG_BCAST_MAX_SUPPLIERS:
@@ -2481,78 +2359,36 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   sxy       = Σ_v d(v)·s(v), s(v) = Σ_{u∈N(v)} d(u): explode(nbrs)
     #               → broadcast degree join → groupBy(v) rides adj's
     #               HashPartitioning(v) — zero pair-scale exchange.
-    # A/B (scripts/r10_assort_grouped_ab.py, alternating min-of-N, value
-    # identity asserted): sf0.1 min 1.92 vs 1.95 s (wash — the 3.6K-edge
-    # residual is the basket pair build + stage floor), sf1 min 2.37 vs
-    # 2.74 s (5/8) and 6.31 vs 12.58 s in a hotter window — the win grows
-    # with the edge table, the structural point of the rewrite. The
-    # node-scale degree broadcast is guarded by the footer part-key bound
-    # (same pattern as _PR_MSG_BCAST_MAX_SUPPLIERS); beyond it the r9
-    # edge-table shape is kept (AQE picks the join strategy there).
-    max_p = _key_upper_bound(sf_dir, "lineitem", "l_partkey")
-    if max_p is not None and 0 <= max_p <= _PR_MSG_BCAST_MAX_SUPPLIERS:
-        par = spark.sparkContext.defaultParallelism
-        adj = checkpoint_partitioned(
-            pairs.select(F.col("pa").alias("v"), F.col("pb").alias("u"))
-            .unionAll(pairs.select(F.col("pb").alias("v"), F.col("pa").alias("u")))
-            .repartition(par, F.col("v"))
-            .groupBy("v")
-            .agg(F.collect_list("u").alias("nbrs"))
-        )
-        d = F.size("nbrs").cast("long")
-        ddec = d.cast("decimal(38,0)")
-        moments = adj.agg(
-            F.sum(d).alias("m2"),
-            F.sum(d * d).alias("sx"),
-            F.sum(ddec * ddec * ddec).alias("sxx"),
-            F.count("*").alias("n_nodes"),
-        )
-        nb = adj.select(F.col("v").alias("u"), d.alias("d_dst"))
-        s_v = (
-            adj.select("v", d.alias("d"), F.explode("nbrs").alias("u"))
-            .join(F.broadcast(nb), "u")
-            .groupBy("v", "d")
-            .agg(F.sum("d_dst").alias("sdeg"))
-        )
-        sxy = s_v.agg(
-            F.sum(F.col("d").cast("decimal(38,0)") * F.col("sdeg")).alias("sxy")
-        )
-        mean = F.col("sx").cast("double") / F.col("m2")
-        return sxy.crossJoin(F.broadcast(moments)).select(
-            "n_nodes",
-            (F.col("m2") / 2).cast("bigint").alias("n_edges"),
-            F.round(
-                (F.col("sxy").cast("double") / F.col("m2") - mean * mean)
-                / (F.col("sxx").cast("double") / F.col("m2") - mean * mean),
-                6,
-            ).alias("assortativity"),
-        )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    ).localCheckpoint(eager=False)  # degree agg + the sxy deg join re-read it
-    # r9 shape (kept as the beyond-broadcast fallback): degree moments
-    # avoid the edge join for m2/sx/sxx; sxy pays one edge-scale join.
-    deg = (
-        edges.groupBy(F.col("src").alias("v"))
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=False)  # moments agg + sxy join + s join
+    # A/B (OPTIMIZATION_r10.md §6, alternating min-of-N, value identity
+    # asserted): sf0.1 min 1.92 vs 1.95 s (wash — the 3.6K-edge residual
+    # is the basket pair build + stage floor), sf1 min 2.37 vs 2.74 s
+    # (5/8) and 6.31 vs 12.58 s in a hotter window — the win grows with
+    # the edge table, the structural point of the rewrite. The degree
+    # broadcast is node-scale (one row per co-purchased part).
+    par = spark.sparkContext.defaultParallelism
+    adj = checkpoint_partitioned(
+        pairs.select(F.col("pa").alias("v"), F.col("pb").alias("u"))
+        .unionAll(pairs.select(F.col("pb").alias("v"), F.col("pa").alias("u")))
+        .repartition(par, F.col("v"))
+        .groupBy("v")
+        .agg(F.collect_list("u").alias("nbrs"))
     )
-    dd = F.col("d").cast("decimal(38,0)")
-    moments = deg.agg(
-        F.sum("d").alias("m2"),
-        F.sum(F.col("d") * F.col("d")).alias("sx"),
-        F.sum(dd * dd * dd).alias("sxx"),
+    d = F.size("nbrs").cast("long")
+    ddec = d.cast("decimal(38,0)")
+    moments = adj.agg(
+        F.sum(d).alias("m2"),
+        F.sum(d * d).alias("sx"),
+        F.sum(ddec * ddec * ddec).alias("sxx"),
         F.count("*").alias("n_nodes"),
     )
-    nb = deg.select(F.col("v").alias("u"), F.col("d").alias("d_dst"))
+    nb = adj.select(F.col("v").alias("u"), d.alias("d_dst"))
     s_v = (
-        edges.join(nb, edges.dst == nb.u)
-        .groupBy("src")
+        adj.select("v", d.alias("d"), F.explode("nbrs").alias("u"))
+        .join(F.broadcast(nb), "u")
+        .groupBy("v", "d")
         .agg(F.sum("d_dst").alias("sdeg"))
     )
-    sxy = s_v.join(deg, s_v.src == deg.v).agg(
+    sxy = s_v.agg(
         F.sum(F.col("d").cast("decimal(38,0)") * F.col("sdeg")).alias("sxy")
     )
     mean = F.col("sx").cast("double") / F.col("m2")
@@ -2885,8 +2721,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # double the lazy DAG per half-step, the measured pagerank failure
 # mode). Top-20 is TakeOrderedAndProject. 100 TB: per-iteration data
 # motion is node-scale scores against the partition-stable pair table;
-# under the PageRank spill threshold the pair table would move to a
-# bucketed scratch table the same way (dedup.py:972-981).
+# past the PageRank spill threshold the pair table would move to a
+# bucketed scratch table the same way (checkpoint.py spill_bucketed).
 # ---------------------------------------------------------------------------
 
 _HITS_ITERS = 3

@@ -125,8 +125,8 @@ class _Handler(BaseHTTPRequestHandler):
         if parts == ["health"]:
             return 200, self.manager.diagnostics()
         if parts == ["metrics"]:
-            # ServerComponentHealthAggregator analog: cluster-level
-            # metrics reduce (poll snapshot + listener lifetime totals)
+            # ServerComponentHealthAggregator analog: pipeline counts plus
+            # the listener's reduce of engine-pushed progress events
             return 200, self.manager.metrics_summary()
         if len(parts) == 2 and parts[0] == "schemas" and self.registry is not None:
             return 200, {

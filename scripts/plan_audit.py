@@ -79,7 +79,7 @@ def main() -> None:
         "errors": sum(1 for v in out.values() if "error" in v),
     }
     agg["notes"] = {
-        "graph_pagerank_influence": "SortMergeJoin expected: rank x edge joins are large-pair at scale (AQE broadcasts the 16k-row ranks at toy SF); 7 exchanges = 5 inflow aggs + build — the edge table is checkpointed hash-partitioned on src (AQE-off for that one job), so no round re-shuffles it",
+        "graph_pagerank_influence": "bipartite rounds over the customer-grouped adjacency (ck, ss), checkpointed hash-partitioned on ck (AQE-off for that one job): per round one node-scale Exchange hashpartitioning(sk) for the supplier inflow aggregate, the supplier messages broadcast into the adjacency, and the customer groupBy(ck) rides its partitioning with no Exchange — no pair-scale exchange after the build",
         "join_full_outer_nation_wealth": "SortMergeJoin expected: FULL OUTER cannot broadcast",
         "events_attribution_linear": "SortMergeJoin expected: the purchase x touch band join is user-keyed with BOTH sides event-scaled (no broadcast hint per round-4 policy); per-user pair fan-out is bounded by 30-minute activity, the same contract as the as-of family",
         "text_hybrid_rrf_search": "SortMergeJoin expected if present: the fusion join is FULL OUTER (no broadcast support) over two top-L lists — <= 2L=100 rows regardless of corpus size",

@@ -123,20 +123,20 @@ def test_scratch_names_are_collision_safe_and_gc_reclaims(spark, sf_smoke):
     from brooklin_spark.checkpoint import gc_dead_scratch, scratch_name
 
     corpus = os.path.join(sf_smoke, "lineitem.parquet")
-    mine = scratch_name("pr_pairs_scratch", corpus)
+    mine = scratch_name("pr_grouped_scratch", corpus)
     assert mine.endswith(f"_{os.getpid()}")
     # same corpus + same process -> stable; different corpus -> different
-    assert mine == scratch_name("pr_pairs_scratch", corpus)
+    assert mine == scratch_name("pr_grouped_scratch", corpus)
     other = scratch_name(
-        "pr_pairs_scratch", os.path.join(sf_smoke, "orders.parquet")
+        "pr_grouped_scratch", os.path.join(sf_smoke, "orders.parquet")
     )
     assert other != mine
     # a dead-pid orphan is reclaimed, the live-pid table survives
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    dead = "pr_pairs_scratch_deadbeef_999999999"
+    dead = "pr_grouped_scratch_deadbeef_999999999"
     os.makedirs(os.path.join(warehouse, dead), exist_ok=True)
     spark.range(1).write.mode("overwrite").saveAsTable(mine)
-    gc_dead_scratch(spark, "pr_pairs_scratch")
+    gc_dead_scratch(spark, "pr_grouped_scratch")
     assert not os.path.exists(os.path.join(warehouse, dead))
     assert spark.catalog.tableExists(mine)
     from brooklin_spark.checkpoint import drop_scratch_table
@@ -166,62 +166,66 @@ def test_drop_scratch_table_resolves_db_qualified_location(spark):
     assert not os.path.isdir(loc)
 
 
-def test_pagerank_spill_path_is_value_identical(spark, sf_smoke):
-    """The beyond-JVM-memory columnar-spill path (pairs scratch table +
-    bucketed-by-src edge table) must produce EXACTLY the in-memory
-    localCheckpoint path's ranks — the switch changes storage, never
-    values (measured identical at sf10; pinned here at smoke SF)."""
+def test_pagerank_spill_path_is_value_identical(spark, sf_smoke, monkeypatch):
+    """The beyond-JVM-memory columnar-spill path (ck-bucketed grouped
+    adjacency scratch table) must produce EXACTLY the in-memory
+    checkpoint path's ranks — the switch changes storage, never values
+    (measured identical at sf10; pinned here at smoke SF)."""
     import brooklin_spark.queries.dedup as dd
 
     fn = registry.QUERIES["graph_pagerank_influence"]
     a = fn(spark, sf_smoke).toPandas()
-    prev = dd._PR_SPILL_LI_ROWS
-    dd._PR_SPILL_LI_ROWS = 1  # force the spill path
-    try:
-        b = fn(spark, sf_smoke).toPandas()
-    finally:
-        dd._PR_SPILL_LI_ROWS = prev
+    monkeypatch.setattr(dd, "_PR_SPILL_LI_ROWS", 1)  # force the spill path
+    b = fn(spark, sf_smoke).toPandas()
     a = a.sort_values("node", ignore_index=True)
     b = b.sort_values("node", ignore_index=True)
     assert a.equals(b) and len(a) > 0
 
 
-def test_pagerank_fused_build_is_value_identical(spark, sf_smoke):
-    """The r9-opt fused grouped-adjacency build (one custkey-keyed
-    exchange -> per-customer supplier arrays; active above
-    _PR_FUSED_LI_ROWS) must produce EXACTLY the plain distinct-pairs
-    build's ranks, in-memory AND on the columnar-scratch spill path, and
-    with the packed-long shuffle disabled (two-column fallback) — the
-    switches change build shape and storage, never values (measured
-    identical at sf0.1/sf1; pinned here at smoke SF)."""
+def test_pagerank_fused_build_is_value_identical(spark, sf_smoke, monkeypatch):
+    """PageRank's one path (grouped-adjacency build + bipartite rounds)
+    equals the DuckDB oracle in memory, on the columnar-scratch spill
+    path, and with the packed-long shuffle disabled (two-column build) —
+    the switches change storage and build shape, never values."""
     import brooklin_spark.queries.dedup as dd
+    from tests.oracle import compare, duck_connection
 
-    fn = registry.QUERIES["graph_pagerank_influence"]
-    prev_f = dd._PR_FUSED_LI_ROWS
-    prev_s = dd._PR_SPILL_LI_ROWS
-    prev_kb = dd._key_upper_bound
-    # the fused bipartite path is the default everywhere since r10; force
-    # the plain distinct-pairs build as the reference side
-    dd._PR_FUSED_LI_ROWS = 10**18
-    a = fn(spark, sf_smoke).toPandas().sort_values("node", ignore_index=True)
-    dd._PR_FUSED_LI_ROWS = 0
-    try:
-        b = fn(spark, sf_smoke).toPandas()  # fused, in-memory
-        dd._PR_SPILL_LI_ROWS = 0
-        c = fn(spark, sf_smoke).toPandas()  # fused + columnar scratch
-        dd._PR_SPILL_LI_ROWS = prev_s
-        dd._key_upper_bound = lambda *_: None
-        d = fn(spark, sf_smoke).toPandas()  # fused, two-column fallback
-    finally:
-        dd._PR_FUSED_LI_ROWS = prev_f
-        dd._PR_SPILL_LI_ROWS = prev_s
-        dd._key_upper_bound = prev_kb
-    for other in (b, c, d):
-        other = other.sort_values("node", ignore_index=True)
-        assert a.equals(other) and len(a) > 0
+    name = "graph_pagerank_influence"
+    fn, sql = registry.QUERIES[name], registry.ORACLES[name]
+    con = duck_connection(sf_smoke)
+    compare(fn(spark, sf_smoke), con, sql, name)  # in memory
+    monkeypatch.setattr(dd, "_PR_SPILL_LI_ROWS", 0)
+    compare(fn(spark, sf_smoke), con, sql, name + "[spill]")
+    monkeypatch.setattr(dd, "_PR_SPILL_LI_ROWS", 10**18)
+    monkeypatch.setattr(dd, "_key_upper_bound", lambda *_: None)
+    compare(fn(spark, sf_smoke), con, sql, name + "[two-column]")
 
 
-def test_kcenter_spill_state_is_value_identical(spark, sf_smoke):
+def test_pagerank_empty_graph_matches_oracle(spark, sf_smoke, tmp_path):
+    """A corpus whose lineitem is empty has no graph: PageRank returns the
+    oracle's zero rows instead of dividing by a zero node count."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tests.oracle import compare, duck_connection
+
+    for f in os.listdir(sf_smoke):
+        if f.endswith(".parquet") and f != "lineitem.parquet":
+            os.symlink(os.path.join(sf_smoke, f), tmp_path / f)
+    li = pq.read_table(os.path.join(sf_smoke, "lineitem.parquet"))
+    pq.write_table(li.slice(0, 0), tmp_path / "lineitem.parquet")
+    name = "graph_pagerank_influence"
+    corpus = str(tmp_path)
+    compare(
+        registry.QUERIES[name](spark, corpus),
+        duck_connection(corpus),
+        registry.ORACLES[name],
+        name,
+    )
+
+
+def test_kcenter_spill_state_is_value_identical(spark, sf_smoke, monkeypatch):
     """The r10 columnar-spill switch for kcenter's incremental running-max
     state (alternating scratch tables past _KC_SPILL_EMB_ROWS) must produce
     EXACTLY the localCheckpoint path's centers, and must leave no scratch
@@ -230,12 +234,8 @@ def test_kcenter_spill_state_is_value_identical(spark, sf_smoke):
 
     fn = registry.QUERIES["embedding_kcenter_coreset"]
     a = fn(spark, sf_smoke).toPandas().sort_values("rank", ignore_index=True)
-    prev = qs._KC_SPILL_EMB_ROWS
-    qs._KC_SPILL_EMB_ROWS = 0
-    try:
-        b = fn(spark, sf_smoke).toPandas().sort_values("rank", ignore_index=True)
-    finally:
-        qs._KC_SPILL_EMB_ROWS = prev
+    monkeypatch.setattr(qs, "_KC_SPILL_EMB_ROWS", 0)
+    b = fn(spark, sf_smoke).toPandas().sort_values("rank", ignore_index=True)
     assert a.equals(b) and len(a) > 0
     leftover = [
         t.name for t in spark.catalog.listTables() if t.name.startswith("kc_state_")

@@ -12,6 +12,7 @@ import pytest
 
 from brooklin_spark.manager import PipelineManager
 from brooklin_spark.model import PipelineSpec, PipelineStatus
+from tests.test_metrics import _wait
 
 
 @pytest.fixture()
@@ -366,6 +367,7 @@ def test_many_concurrent_pipelines(spark, workdir, tmp_path):
     down without disturbing the others."""
     names = [f"mt{i}" for i in range(5)]
     mgr = PipelineManager(spark, workdir)
+    rows0 = mgr.metrics_summary()["listener"]["input_rows"]
     for i, name in enumerate(names):
         src = str(tmp_path / f"in{i}")
         _write_lines(src + "/a.txt", [f"{name}-r1", f"{name}-r2"])
@@ -382,7 +384,10 @@ def test_many_concurrent_pipelines(spark, workdir, tmp_path):
     assert len(diag) == 5 and all(d["active"] for d in diag.values())
     m = mgr.metrics_summary()
     assert m["pipelines"] == 5 and m["active_queries"] == 5
-    assert m["recent_input_rows"] >= 10
+    # the listener reduce sees the engine's pushed progress asynchronously
+    assert _wait(
+        lambda: mgr.metrics_summary()["listener"]["input_rows"] >= rows0 + 10
+    )
     # deleting one leaves the rest running
     mgr.delete(names[0])
     assert mgr.query_of(names[1]).isActive

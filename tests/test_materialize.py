@@ -14,6 +14,7 @@ from brooklin_spark import registry
 from brooklin_spark.manager import PipelineManager
 from brooklin_spark.model import PipelineSpec
 from brooklin_spark.sinks.materialize import current_version, merge_batch, read_state
+from tests.test_metrics import _wait
 
 registry.load_all()
 
@@ -106,6 +107,7 @@ def test_streaming_materialize_from_rate(spark, tmp_path):
     appears, snapshot version advances, metrics reduce sees the query."""
     root = str(tmp_path / "state")
     mgr = PipelineManager(spark, str(tmp_path / "mgr"))
+    rows0 = mgr.metrics_summary()["listener"]["input_rows"]
     mgr.create(
         PipelineSpec(
             name="ratemat",
@@ -126,8 +128,10 @@ def test_streaming_materialize_from_rate(spark, tmp_path):
         n = st.count() if st is not None else 0
     assert current_version(root) >= 1
     assert n > 0
-    m = mgr.metrics_summary()
-    assert m["active_queries"] >= 1 and m["recent_input_rows"] > 0
+    assert mgr.metrics_summary()["active_queries"] >= 1
+    assert _wait(
+        lambda: mgr.metrics_summary()["listener"]["input_rows"] > rows0
+    )
     mgr.delete("ratemat")
 
 

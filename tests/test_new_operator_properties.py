@@ -709,7 +709,7 @@ def test_kcenter_matches_numpy_traversal(spark, sf_correct):
     assert got == want
 
 
-def test_kcenter_broadcast_kernel_path_matches_literal_path(spark, sf_smoke):
+def test_kcenter_broadcast_kernel_path_matches_literal_path(spark, sf_smoke, monkeypatch):
     """The large-k broadcast-matrix kernel must traverse to the SAME
     centers and objective values as the small-k literal-fold path (the
     only divergence surface is a <=1-ulp pre-round difference in the dot
@@ -719,10 +719,6 @@ def test_kcenter_broadcast_kernel_path_matches_literal_path(spark, sf_smoke):
 
     emb = _table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
     a = qs._kcenter_traverse(spark, emb, 8)
-    prev = qs._KC_LITERAL_MAX
-    qs._KC_LITERAL_MAX = 0  # force the kernel path
-    try:
-        b = qs._kcenter_traverse(spark, emb, 8)
-    finally:
-        qs._KC_LITERAL_MAX = prev
+    monkeypatch.setattr(qs, "_KC_LITERAL_MAX", 0)  # force the kernel path
+    b = qs._kcenter_traverse(spark, emb, 8)
     assert a == b and len(a) == 8

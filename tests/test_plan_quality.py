@@ -579,11 +579,15 @@ def test_q15_q11_scalar_agg_not_global_window(spark, sf_correct):
 
 
 def test_pagerank_rounds_do_not_reshuffle_edges(spark, sf_correct):
-    """The checkpointed edge table is hash-partitioned on src
+    """The grouped adjacency is checkpointed hash-partitioned on ck
     (checkpoint_partitioned), so with broadcast disabled — the at-scale
-    shape — NO round may re-exchange it; only the inflow aggregates and
-    the one-time build remain. Pins the AQE/UnknownPartitioning fix."""
+    shape — NO round may re-exchange it on ck: the s→c messages are
+    broadcast into it and its groupBy(ck) rides its partitioning. The only
+    round exchange is the node-scale supplier inflow aggregate, one per
+    round. Pins the AQE/UnknownPartitioning fix and the bipartite shape."""
     import re
+
+    from brooklin_spark.queries.dedup import _PR_ITERS
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -592,8 +596,10 @@ def test_pagerank_rounds_do_not_reshuffle_edges(spark, sf_correct):
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    edge_exchanges = re.findall(r"Exchange hashpartitioning\(src#\d+", plan)
-    assert not edge_exchanges, edge_exchanges
+    ck = re.findall(r"Exchange hashpartitioning\(ck#\d+", plan)
+    sk = re.findall(r"Exchange hashpartitioning\(sk#\d+", plan)
+    assert not ck, ck
+    assert len(sk) == _PR_ITERS, sk
 
 
 def test_runtime_bloom_filter_reaches_lineitem_scan(spark, sf_correct):
@@ -653,7 +659,7 @@ def test_ivfpq_query_path_is_jvm_only(spark, sf_correct):
 
 
 @pytest.mark.slow
-def test_ivfpq_lut_join_fallback_is_value_identical(spark, sf_correct):
+def test_ivfpq_lut_join_fallback_is_value_identical(spark, sf_correct, monkeypatch):
     """Above _IVFPQ_LUT_MAP_MAX the ADC LUT falls back from the constant
     map to m broadcast joins (plan-size guard); both paths must produce
     exactly the same rows — forced here by dropping the threshold to 0."""
@@ -662,12 +668,8 @@ def test_ivfpq_lut_join_fallback_is_value_identical(spark, sf_correct):
 
     fn = reg.QUERIES["ann_ivfpq_topk"]
     a = {tuple(r) for r in fn(spark, sf_correct).collect()}
-    prev = S._IVFPQ_LUT_MAP_MAX
-    S._IVFPQ_LUT_MAP_MAX = 0
-    try:
-        b = {tuple(r) for r in fn(spark, sf_correct).collect()}
-    finally:
-        S._IVFPQ_LUT_MAP_MAX = prev
+    monkeypatch.setattr(S, "_IVFPQ_LUT_MAP_MAX", 0)
+    b = {tuple(r) for r in fn(spark, sf_correct).collect()}
     assert a == b and len(a) > 0
 
 
